@@ -317,7 +317,10 @@ object Bench {
     var lastNudge = Long.MinValue / 2
     var nudges = 0L
     var scratchReleased = 0L
-    def runPass(): Seq[(String, Double, Boolean)] =
+    def runPass(): Seq[(String, Double, Boolean)] = {
+      // the backstop guards against shuffle files accumulating within the
+      // pass, so its threshold is relative to the space the pass began with
+      val lowSpace = new java.io.File(shuffleScratchDir).getUsableSpace / 2
       (sharedEntry ++ selected.toSeq.sortBy(_._1)).map { case (name, fn) =>
         settle(10) // drain the previous query's compile backlog (untimed)
         val m0 = metricsListener.map { l => drainBus(); l.snapshot() }
@@ -395,7 +398,7 @@ object Bench {
         // spark.local.dir > java.io.tmpdir, so monitor the same path.
         // The per-pass `nudges=` count on stderr is the inertness
         // evidence: with the lifecycle above it should stay 0.
-        if (new java.io.File(shuffleScratchDir).getUsableSpace < (32L << 30)
+        if (new java.io.File(shuffleScratchDir).getUsableSpace < lowSpace
             && System.nanoTime() - lastNudge > 60000000000L) {
           lastNudge = System.nanoTime()
           nudges += 1
@@ -404,6 +407,7 @@ object Bench {
         }
         (name, sec, failed.isDefined)
       }
+    }
     // Two timed passes, per-query MINIMUM. Measured (runs 1-5 this round,
     // identical code): the same battery swings 90s..175s run-to-run, with
     // a CONSECUTIVE block of queries 5-30x slow at a different battery

@@ -4,13 +4,25 @@ import java.io.{File, PrintWriter}
 
 import org.apache.spark.sql.SparkSession
 
-/** Dumps `explain("formatted")` for every SparkEntry query into EXPLAINS.md —
-  * the plan-quality audit trail (pushdown, broadcast choice, codegen spans).
+/** Dumps `explain("formatted")` for the SparkEntry queries into a markdown
+  * file — the plan-quality audit trail (pushdown, broadcast choice, codegen
+  * spans).
+  *
+  * Usage: `Plans [out] [query,…]`. `out` defaults to EXPLAINS.md; the
+  * optional comma-separated query list (SparkEntry names) restricts the
+  * dump to those queries. SPARK_GRAFT_SF_DIR picks the fixture.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = args.headOption.getOrElse("EXPLAINS.md")
+    val only = args.lift(1).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+    }
+    val selected = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_(name)) }.sortBy(_._1)
     val spark = SparkSession.builder()
       .master("local[8]")
       .appName("plans")
@@ -27,7 +39,7 @@ object Plans {
       "(regenerate: `sbt \"runMain graft.Plans\"`). Audit targets: " +
       "`PushedFilters`/`ReadSchema` on scans, BroadcastHashJoin on dim " +
       "joins, WholeStageCodegen span width, no unexpected CartesianProduct.")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       pw.println(s"\n## $name\n")
       pw.println("```")
       try {
@@ -44,7 +56,11 @@ object Plans {
     // budget on both cell layouts. Audit target: NO Window operator —
     // the round-9 hatch assigns cells via hash-mod centroid selection +
     // a broadcast argmax kernel, never a per-label row_number.
-    for ((tag, bound) <- Seq(("flat", 200000L), ("two-level", 4L))) {
+    val hatchBounds =
+      if (selected.exists(_._1 == "d12_embed_neardup"))
+        Seq(("flat", 200000L), ("two-level", 4L))
+      else Nil
+    for ((tag, bound) <- hatchBounds) {
       pw.println(s"\n## d12_embed_neardup (forced hatch, budget=300, $tag cells)\n")
       pw.println("```")
       try {

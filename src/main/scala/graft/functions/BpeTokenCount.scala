@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -101,17 +100,7 @@ case class BpeTokenCount(child: Expression) extends UnaryExpression {
 }
 
 object BpeTokenCount {
-  /** Register `bpe_token_count` in the session's function registry
-    * (idempotent) — same dual path as [[FloatDotProduct]]: imperative
-    * here, declarative via [[graft.GraftExtensions]].
-    */
+  /** Register `bpe_token_count` from [[graft.GraftExtensions.functions]] (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "bpe_token_count"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"bpe_token_count requires exactly 1 argument, got ${exprs.length}")
-        BpeTokenCount(exprs.head)
-      })
+    graft.GraftExtensions.register(spark, "bpe_token_count")
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
@@ -95,17 +95,7 @@ object DescKey {
     ~(if (b < 0) b ^ Long.MaxValue else b)
   }
 
-  /** Register `desc_key` in the session's function registry (idempotent)
-    * — same dual path as [[TopKStructs]]: imperative here, declarative
-    * via [[graft.GraftExtensions]].
-    */
+  /** Register `desc_key` from [[graft.GraftExtensions.functions]] (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("desc_key"),
-      new ExpressionInfo(classOf[DescKey].getName, "desc_key"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"desc_key requires exactly 1 argument, got ${exprs.length}")
-        DescKey(exprs.head)
-      })
+    graft.GraftExtensions.register(spark, "desc_key")
 }

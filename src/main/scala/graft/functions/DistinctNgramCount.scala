@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -98,17 +97,7 @@ case class DistinctNgramCount(left: Expression, right: Expression)
 }
 
 object DistinctNgramCount {
-  /** Register `distinct_ngram_count` (idempotent) — same dual path as
-    * [[FloatDotProduct]]: imperative here, declarative via
-    * [[graft.GraftExtensions]].
-    */
+  /** Register `distinct_ngram_count` from [[graft.GraftExtensions.functions]] (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("distinct_ngram_count"),
-      new ExpressionInfo(classOf[DistinctNgramCount].getName, "distinct_ngram_count"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"distinct_ngram_count requires exactly 2 arguments, got ${exprs.length}")
-        DistinctNgramCount(exprs(0), exprs(1))
-      })
+    graft.GraftExtensions.register(spark, "distinct_ngram_count")
 }

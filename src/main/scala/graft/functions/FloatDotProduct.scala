@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -96,14 +95,7 @@ case class FloatDotProduct(left: Expression, right: Expression)
 }
 
 object FloatDotProduct {
-  /** Register `float_dot` in the session's function registry (idempotent). */
+  /** Register `float_dot` from [[graft.GraftExtensions.functions]] (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"float_dot requires exactly 2 arguments, got ${exprs.length}")
-        FloatDotProduct(exprs(0), exprs(1))
-      })
+    graft.GraftExtensions.register(spark, "float_dot")
 }

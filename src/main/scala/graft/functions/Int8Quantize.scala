@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
@@ -146,14 +145,7 @@ case class Int8Quantize(child: Expression) extends UnaryExpression {
 }
 
 object Int8Quantize {
-  /** Register `int8_quantize` in the session's registry (idempotent). */
+  /** Register `int8_quantize` from [[graft.GraftExtensions.functions]] (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("int8_quantize"),
-      new ExpressionInfo(classOf[Int8Quantize].getName, "int8_quantize"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"int8_quantize requires exactly 1 argument, got ${exprs.length}")
-        Int8Quantize(exprs.head)
-      })
+    graft.GraftExtensions.register(spark, "int8_quantize")
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -125,17 +124,7 @@ object RepetitionProfile {
     l1 - l2
   }
 
-  /** Register `repetition_profile` (idempotent) — same dual path as
-    * [[FloatDotProduct]]: imperative here, declarative via
-    * [[graft.GraftExtensions]].
-    */
+  /** Register `repetition_profile` from [[graft.GraftExtensions.functions]] (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("repetition_profile"),
-      new ExpressionInfo(classOf[RepetitionProfile].getName, "repetition_profile"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"repetition_profile requires exactly 1 argument, got ${exprs.length}")
-        RepetitionProfile(exprs.head)
-      })
+    graft.GraftExtensions.register(spark, "repetition_profile")
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -90,17 +89,7 @@ object TokenNgrams {
     new GenericArrayData(out.toArray)
   }
 
-  /** Register `token_ngrams` (idempotent) — same dual path as
-    * [[FloatDotProduct]]: imperative here, declarative via
-    * [[graft.GraftExtensions]].
-    */
+  /** Register `token_ngrams` from [[graft.GraftExtensions.functions]] (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("token_ngrams"),
-      new ExpressionInfo(classOf[TokenNgrams].getName, "token_ngrams"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3,
-          s"token_ngrams requires exactly 3 arguments, got ${exprs.length}")
-        TokenNgrams(exprs(0), exprs(1), exprs(2))
-      })
+    graft.GraftExtensions.register(spark, "token_ngrams")
 }

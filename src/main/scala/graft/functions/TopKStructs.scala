@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, RowOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RowOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType, TimestampNTZType, TimestampType}
@@ -264,17 +264,7 @@ object TopKStructs {
     }
   }
 
-  /** Register `topk_structs` in the session's function registry
-    * (idempotent) — same dual path as [[FloatDotProduct]]: imperative
-    * here, declarative via [[graft.GraftExtensions]].
-    */
+  /** Register `topk_structs` from [[graft.GraftExtensions.functions]] (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("topk_structs"),
-      new ExpressionInfo(classOf[TopKStructs].getName, "topk_structs"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"topk_structs requires exactly 2 arguments, got ${exprs.length}")
-        TopKStructs(exprs(0), exprs(1))
-      })
+    graft.GraftExtensions.register(spark, "topk_structs")
 }

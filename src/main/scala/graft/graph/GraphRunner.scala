@@ -226,10 +226,7 @@ class GraphRunner(
     * triggers, services/trigger.py:10-22; per-node execution slices,
     * node.py:465-500).
     */
-  private[graft] var cascadeParallelism: Int =
-    sys.env.get("GRAFT_CASCADE_PARALLELISM")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(4)
+  private[graft] var cascadeParallelism: Int = 4
 
   /** Two nodes conflict when either writes a store the other touches:
     * write-write (both append/replace the same table), or write-read (one

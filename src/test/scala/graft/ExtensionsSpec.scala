@@ -16,14 +16,52 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("injected builder matches the imperative register path") {
-    // register() over the injected entry must not change resolution
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // one sample call per kernel in the registry table; a table entry
+    // without a sample fails the key-set check below
+    val samples = Map(
+      "float_dot" -> "array(cast(0.5 as float)), array(cast(4.0 as float))",
+      "bpe_token_count" -> "'a b!'",
+      "distinct_ngram_count" -> "split('a b a b', ' '), 2",
+      "repetition_profile" -> "'a b a b a'",
+      "token_ngrams" -> "'a b c', 2, 1",
+      "int8_quantize" -> "array(cast(0.5 as float), cast(-1.0 as float))",
+      "topk_structs" -> "struct(x), 1",
+      "desc_key" -> "x")
+    val names = GraftExtensions.functions.map(_._1.funcName)
+    assert(names.toSet == samples.keySet && names.size == samples.size)
+    def query(s: SparkSession, name: String) =
+      s.sql(s"SELECT $name(${samples(name)}) AS r FROM VALUES (1.5D) AS t(x)")
+    // newSession() re-applies the extensions, so drop the kernels to get a
+    // session that only has what the imperative path installs
+    def bare(): SparkSession = {
+      val b = spark.newSession()
+      names.foreach(n =>
+        b.sessionState.functionRegistry.dropFunction(FunctionIdentifier(n)))
+      b
+    }
+    val viaEnsure = bare()
+    GraftExtensions.ensureRegistered(viaEnsure)
+    val viaRegister = bare()
+    names.foreach { name =>
+      val injected = query(spark, name)
+      intercept[Exception](query(viaRegister, name)) // really bare
+      GraftExtensions.register(viaRegister, name)
+      for (other <- Seq(viaEnsure, viaRegister)) {
+        val df = query(other, name)
+        assert(df.queryExecution.analyzed.sameResult(
+          injected.queryExecution.analyzed), name)
+        assert(df.collect().toSeq == injected.collect().toSeq, name)
+      }
+      // arity misuse fails analysis, not execution
+      intercept[Exception](spark.sql(s"SELECT $name()").collect())
+    }
+    // the kernel objects' register goes through the same table
     graft.functions.FloatDotProduct.register(spark)
-    val v = spark.sql(
+    assert(spark.sql(
       "SELECT float_dot(array(cast(0.5 as float)), array(cast(4.0 as float)))")
-      .as[Double].head()
-    assert(v == 2.0)
-    // arity misuse fails analysis, not execution
-    intercept[Exception](spark.sql("SELECT float_dot(array(cast(1.0 as float)))").collect())
+      .as[Double].head() == 2.0)
   }
 
   test("length mismatch yields NULL, not a partial dot product") {

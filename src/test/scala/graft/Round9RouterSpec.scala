@@ -2,13 +2,10 @@ package graft
 
 import graft.queries.DedupQueries
 
-/** Round-9: the pair-family router gained a deployment-fabric dimension —
-  * uniform-df corpora route to the bucket kernel on a cluster (halves
-  * candidate-stage fabric bytes; measured-neutral on one JVM) and to the
-  * plain count-join locally, while Zipf-tailed corpora take the
-  * rarest-first prefix on ANY fabric (it changes the asymptotics, not
-  * just the byte count). The arms' output equality is pinned in
-  * Round8KernelSpec/Round8RouterSpec; this pins the decision table.
+/** The pair-family router chooses its plan from the measured corpus shape
+  * alone: Zipf-tailed corpora take the rarest-first prefix (it changes the
+  * asymptotics), uniform-df corpora the plain count-join. The arms' output
+  * equality is pinned in Round8RouterSpec; this pins the decision table.
   */
 class Round9RouterSpec extends SparkSpec {
 
@@ -19,24 +16,8 @@ class Round9RouterSpec extends SparkSpec {
     vocab = 500000L, gramRows = 5e6, coPairs = 4e8, rareVocabFrac = 0.55)
 
   test("route table: corpus shape x fabric") {
-    // uniform-df corpus: fabric decides between the two count-based arms
-    assert(DedupQueries.routePairArm(uniform, cluster = false) ==
-      DedupQueries.CountJoinArm)
-    assert(DedupQueries.routePairArm(uniform, cluster = true) ==
-      DedupQueries.BucketArm)
-    // Zipf corpus: the prefix arm wins on any fabric — selectivity beats
-    // byte accounting
-    assert(DedupQueries.routePairArm(zipf, cluster = false) ==
-      DedupQueries.PrefixArm)
-    assert(DedupQueries.routePairArm(zipf, cluster = true) ==
-      DedupQueries.PrefixArm)
-  }
-
-  test("local session reports no cluster fabric unless forced") {
-    // local[n] master => not a cluster; the SPARK_GRAFT_CLUSTER override
-    // is exercised implicitly (env vars are immutable in-JVM, so the
-    // positive case is covered by the routePairArm table above)
-    assert(!DedupQueries.clusterFabric(spark))
+    assert(DedupQueries.routePairArm(uniform) == DedupQueries.CountJoinArm)
+    assert(DedupQueries.routePairArm(zipf) == DedupQueries.PrefixArm)
   }
 
   test("gramDfStats is memoized per (app, dir)") {
